@@ -20,6 +20,7 @@ import org.apache.spark.sql.functions._
   * float summation-order jitter across partitionings or engines.
   */
 object Analytics {
+  import Components.{idLess, idTypeSupported}
 
   /** Per-node out/in/total degree over a directed edge list (src, dst).
     *
@@ -253,35 +254,6 @@ object Analytics {
     }
     def n: Int = ids.length
   }
-
-  /** UTF-8 binary (code-point) less-than — Spark's UTF8String and
-    * DuckDB's VARCHAR ordering; Java String.compareTo disagrees on
-    * supplementary characters (the Components comparator, shared here
-    * for the label-propagation min-label tie-break).
-    */
-  private def u8Less(a: String, b: String): Boolean = {
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val ca = a.codePointAt(i); val cb = b.codePointAt(i)
-      if (ca != cb) return ca < cb
-      i += Character.charCount(ca)
-    }
-    a.length < b.length
-  }
-
-  /** Id ordering used by the local kernels: numeric for longs, UTF-8
-    * binary for strings (matches Spark's own `<`/min over these types).
-    */
-  private def idLess(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: Long, y: Long)     => x < y
-    case (x: String, y: String) => u8Less(x, y)
-    case _ => throw new IllegalStateException("unsupported id type")
-  }
-
-  private def idTypeSupported(dt: org.apache.spark.sql.types.DataType): Boolean =
-    dt == org.apache.spark.sql.types.LongType ||
-      dt == org.apache.spark.sql.types.StringType
 
   /** Open-addressing accumulator over packed long pair keys (0 = empty
     * sentinel): per key a wedge count and an RA-contribution sum, plus an

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * expressions. Spark 4 made `ExpressionUtils` (and `Column.expr`)
   * `private[sql]`, so libraries shipping their own expressions host this
   * two-liner inside the sql package — the established pattern for
-  * third-party Catalyst extensions; nothing else in this repo lives
+  * third-party Catalyst extensions; only [[GraftPlanBridge]] joins it
   * outside the graft namespace.
   */
 object GraftColumnBridge {

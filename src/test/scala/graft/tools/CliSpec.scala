@@ -174,6 +174,24 @@ class CliSpec extends SparkSpec {
     assert(files.length > 1) // basic.tsv has several components
   }
 
+  test("partition merges two components joined by a directed 2-cycle") {
+    val in = out("two-cycle.tsv")
+    Files.write(Paths.get(in),
+      ("#curie_map:\n#  a: http://example.org/a/\n" +
+        "#  b: http://example.org/b/\n" +
+        "subject_id\tpredicate_id\tobject_id\tmapping_justification\n" +
+        "a:1\tskos:exactMatch\ta:2\tsemapv:ManualMappingCuration\n" +
+        "b:1\tskos:exactMatch\tb:2\tsemapv:ManualMappingCuration\n" +
+        "a:1\tskos:narrowMatch\tb:1\tsemapv:ManualMappingCuration\n" +
+        "b:2\tskos:narrowMatch\ta:2\tsemapv:ManualMappingCuration\n")
+        .getBytes(UTF_8))
+    val d = out("two-cycle-cliques")
+    assert(cli("partition", in, "-d", d) == 0)
+    val files = new java.io.File(d).listFiles().map(_.getName).toSeq
+    assert(files == Seq("clique_1.sssom.tsv"))
+    assert(SssomTsv.read(spark, s"$d/clique_1.sssom.tsv").df.count() == 4)
+  }
+
   test("diff labels rows UNIQUE_1/UNIQUE_2/COMMON_TO_BOTH") {
     assert(cli("diff", fixture("basic.tsv"), fixture("basic2.tsv"),
       "-o", out("diff.tsv")) == 0)
