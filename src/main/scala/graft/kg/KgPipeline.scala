@@ -11,10 +11,11 @@ import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
 /** End-to-end KG construction over transcript tables (the north rule):
   * mention detection → exact + MinHash-blocked fuzzy linking → SSSOM
-  * reconcile (window-max dedup) → connected-component canonicalization on
-  * exactMatch edges → Iceberg-layout node/edge Parquet tables with
-  * per-partition lineage rows, triple-count metrics, a snapshot manifest,
-  * and a processed-partition ledger for checkpoint resume.
+  * reconcile (groupBy-max + join-back dedup) → connected-component
+  * canonicalization on exactMatch edges → Iceberg-layout node/edge Parquet
+  * tables with per-partition lineage rows, triple-count metrics, a
+  * snapshot manifest, and a processed-partition ledger for checkpoint
+  * resume.
   *
   * "Iceberg-layout" because no Iceberg runtime jar exists offline (SURVEY
   * §7.0): we write `data/bucket=<k>/…parquet` plus JSON snapshot metadata
@@ -23,10 +24,11 @@ import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
   *
   * Scale notes: the dictionary side of both joins is broadcast (no shuffle
   * on the mention side); hot head-entity keys are absorbed by map-side
-  * partial aggregation + AQE skew-join in the reconcile; the CC loop
-  * localCheckpoints per round; buckets are processed in
-  * `resumeGroups` independent jobs so a restart skips completed groups via
-  * the ledger.
+  * partial aggregation + AQE skew-join in the reconcile; fuzzy linking
+  * blocks and verifies each distinct mention surface once; CC takes a
+  * one-probe driver arm below `Components.LocalCutoff`; buckets are
+  * processed in `resumeGroups` independent jobs so a restart skips
+  * completed groups via the ledger.
   */
 object KgPipeline {
 
@@ -144,13 +146,34 @@ object KgPipeline {
     * Buckets are grouped into `resumeGroups` jobs; each group is written
     * atomically (job success → ledger entry), so a relaunch only runs
     * missing groups.
+    *
+    * Shape: the edge table is hash-partitioned on `bucket` once, before
+    * its checkpoint. The checkpoint keeps that partitioning, so every
+    * group's edge write and its nodes union + groupBy(node, bucket) run
+    * with no exchange, and each `bucket=<k>` directory gets one file.
+    * Every per-bucket lineage row and the manifest's triple and component
+    * counts come from one `rollup("bucket")` aggregate.
     */
   def materialize(spark: SparkSession, edges: DataFrame, cfg: Config): Result = {
     val bucketed = edges
       .withColumn("bucket", pmod(xxhash64(col(Schema.SubjectId)),
         lit(cfg.buckets)).cast("int"))
       .withColumn("group", pmod(col("bucket"), lit(cfg.resumeGroups)))
+      .repartition(col("bucket"))
       .localCheckpoint(true) // compute extraction once across group jobs
+
+    // per-bucket (n_triples, n_components) plus the grand total (the
+    // rollup row with a null bucket; `bucket` itself is never null).
+    // Over an empty table rollup returns no rows at all, so the total
+    // defaults to zeros.
+    val stats = bucketed.rollup("bucket")
+      .agg(count(lit(1)), countDistinct(col("component")))
+      .collect()
+      .map(r => (if (r.isNullAt(0)) None else Some(r.getInt(0)),
+        (r.getLong(1), r.getLong(2))))
+    val (nTriples, nComponents) =
+      stats.collectFirst { case (None, tc) => tc }.getOrElse((0L, 0L))
+    val perBucket = stats.collect { case (Some(b), tc) => b -> tc }.sortBy(_._1)
 
     val done = completedGroups(cfg.outDir)
     var run = 0; var skipped = 0
@@ -159,7 +182,6 @@ object KgPipeline {
       else {
         val part = bucketed.filter(col("group") === g)
         part.drop("group")
-          .repartition(col("bucket"))
           .write.mode(SaveMode.Overwrite)
           .partitionBy("bucket")
           .parquet(s"${cfg.outDir}/edges/group=$g")
@@ -170,32 +192,22 @@ object KgPipeline {
             col("component"), col("bucket")))
           .groupBy("node", "bucket")
           .agg(min("component").as("component"), count(lit(1)).as("degree"))
-        nodes.repartition(col("bucket"))
-          .write.mode(SaveMode.Overwrite)
+        nodes.write.mode(SaveMode.Overwrite)
           .partitionBy("bucket")
           .parquet(s"${cfg.outDir}/nodes/group=$g")
-        // per-partition lineage + metrics
-        val metrics = part.groupBy("bucket")
-          .agg(count(lit(1)).as("n_triples"),
-            countDistinct(col("component")).as("n_components"))
-          .collect()
-          .map(r => s"""{"group":$g,"bucket":${r.getInt(0)},""" +
-            s""""n_triples":${r.getLong(1)},"n_components":${r.getLong(2)},""" +
-            s""""seed":${cfg.seed}}""")
-        metrics.foreach(appendLedger(cfg.outDir, _))
+        // per-partition lineage + metrics, then the group's marker
+        perBucket.filter(_._1 % cfg.resumeGroups == g).foreach { case (b, (n, c)) =>
+          appendLedger(cfg.outDir, s"""{"group":$g,"bucket":$b,""" +
+            s""""n_triples":$n,"n_components":$c,"seed":${cfg.seed}}""")
+        }
         appendLedger(cfg.outDir,
           s"""{"group":$g,"status":"complete","n_buckets":${cfg.buckets / cfg.resumeGroups}}""")
         run += 1
       }
     }
 
-    // snapshot manifest (atomic via temp + move). Two passes over the
-    // checkpointed edge table, not three: triple + component counts fuse
-    // into one aggregate; the node count needs its own explode-distinct
-    // (subjects ∪ objects is a different row domain)
-    val tc = bucketed.agg(count(lit(1)).as("t"),
-      countDistinct(col("component")).as("c")).first()
-    val (nTriples, nComponents) = (tc.getLong(0), tc.getLong(1))
+    // snapshot manifest (atomic via temp + move). The node count needs its
+    // own explode-distinct (subjects ∪ objects is a different row domain)
     val nNodes = bucketed.select(explode(array(
         col(Schema.SubjectId), col(Schema.ObjectId))).as("n"))
       .distinct().count()

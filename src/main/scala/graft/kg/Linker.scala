@@ -24,7 +24,10 @@ import org.apache.spark.sql.functions._
   *     rarest-token blocking (`linkFuzzyTfidf`) — each dictionary surface
   *     registers under its lowest-df token, mentions meet concepts via an
   *     equi-join on that token. Both verified by exact trigram-Jaccard
-  *     ≥ threshold.
+  *     ≥ threshold. Both block, dedup and verify each DISTINCT mention
+  *     surface once (work grows with the vocabulary, not the corpus),
+  *     then attach the verified links to the (conv_id, turn_idx, mention)
+  *     occurrences through a broadcast join.
   *
   * Output: SSSOM mapping rows (subject = mention CURIE, object = concept,
   * predicate ∈ skos:exactMatch/closeMatch,
@@ -85,45 +88,67 @@ object Linker {
         when(col("isLabel"), lit(0.95)).otherwise(lit(0.85)).as("confidence"))
   }
 
-  /** Fuzzy link via LSH banding + trigram-Jaccard verification. */
+  /** Fuzzy-link eligibility: full multi-word surfaces only — single short
+    * tokens only flood the blocking keys with low-similarity candidates.
+    */
+  private def fuzzyEligible(mentions: DataFrame): DataFrame =
+    mentions.filter(col("mention").contains(" ") && length(col("mention")) >= 7)
+
+  private def dictSurfaces(dictionary: DataFrame): DataFrame =
+    dictionary.select(col("concept_id"), normalize(col("label")).as("surface"))
+
+  /** Verify distinct (mention, concept_id) candidates by exact
+    * trigram-Jaccard, then attach the surviving links to every distinct
+    * (conv_id, turn_idx, mention) occurrence. The check reads only the
+    * two strings, so running it per distinct surface instead of per
+    * occurrence is lossless. The verified links (bounded by the
+    * vocabulary, not the corpus) are the broadcast side of the join back:
+    * occurrences are never shuffled on `mention` alone, where one hot
+    * n-gram would land on a single task. Only the linked occurrences are
+    * then deduplicated — a surface repeated inside one turn links once.
+    */
+  private def verifyAndAttach(occurrences: DataFrame, candidates: DataFrame,
+      dictSurf: DataFrame, jaccardMin: Double): DataFrame = {
+    val jac = udf((a: String, b: String) => TextHash.charTrigramJaccard(a, b))
+    val links = candidates
+      .join(broadcast(dictSurf), Seq("concept_id"))
+      .withColumn("jaccard", jac(col("mention"), col("surface")))
+      .filter(col("jaccard") >= jaccardMin && col("mention") =!= col("surface"))
+      .select("mention", "concept_id", "jaccard")
+    occurrences.select("conv_id", "turn_idx", "mention")
+      .join(broadcast(links), Seq("mention"))
+      .select("conv_id", "turn_idx", "mention", "concept_id", "jaccard")
+      .distinct()
+      .select(col("conv_id"), col("turn_idx"), col("mention"),
+        col("concept_id"),
+        lit(Schema.SkosCloseMatch).as("predicate_id"),
+        (col("jaccard") * 0.9).as("confidence"))
+  }
+
+  /** Fuzzy link via LSH banding + trigram-Jaccard verification, run once
+    * per distinct mention surface (see `verifyAndAttach`).
+    */
   def linkFuzzy(mentions: DataFrame, dictionary: DataFrame, bands: Int = 4,
       jaccardMin: Double = 0.55): DataFrame = {
-    // fuzzy linking targets full multi-word surfaces; single short tokens
-    // only flood the LSH buckets with low-similarity candidates
-    val fuzzyMentions = mentions
-      .filter(col("mention").contains(" ") && length(col("mention")) >= 7)
-    val dictSurf = dictionary.select(col("concept_id"),
-      normalize(col("label")).as("surface"))
+    val fuzzyMentions = fuzzyEligible(mentions)
+    val dictSurf = dictSurfaces(dictionary)
     // compute the full signature array ONCE per row, then explode to
     // (band, sig) pairs — signatures before the explode, or every band row
     // recomputes all bands
     val dictBands = dictSurf
       .withColumn("sigs", bandSignatures(col("surface"), bands))
-      .select(col("concept_id"), col("surface"),
-        posexplode(col("sigs")).as(Seq("band", "sig")))
-
-    val mentionBands = fuzzyMentions
+      .select(col("concept_id"), posexplode(col("sigs")).as(Seq("band", "sig")))
+    val surfaceBands = fuzzyMentions.select("mention").distinct()
       .withColumn("sigs", bandSignatures(col("mention"), bands))
-      .select(col("conv_id"), col("turn_idx"), col("mention"),
-        posexplode(col("sigs")).as(Seq("band", "sig")))
-
-    val jac = udf((a: String, b: String) => TextHash.charTrigramJaccard(a, b))
+      .select(col("mention"), posexplode(col("sigs")).as(Seq("band", "sig")))
     // dictionary band rows are tiny (nConcepts × bands): broadcast them
-    // explicitly so the plan never shuffles the mention side, with or
-    // without AQE. The candidate dedup shuffles ONLY the 4-column key —
-    // the surface string rejoins from the broadcast dictionary afterwards;
-    // carrying it through dropDuplicates inflates the hash-agg state and
-    // forces sort-fallback at scale.
-    mentionBands.join(broadcast(dictBands.drop("surface")), Seq("band", "sig"))
-      .select("conv_id", "turn_idx", "mention", "concept_id")
-      .dropDuplicates("conv_id", "turn_idx", "mention", "concept_id")
-      .join(broadcast(dictSurf), Seq("concept_id"))
-      .withColumn("jaccard", jac(col("mention"), col("surface")))
-      .filter(col("jaccard") >= jaccardMin && col("mention") =!= col("surface"))
-      .select(col("conv_id"), col("turn_idx"), col("mention"),
-        col("concept_id"),
-        lit(Schema.SkosCloseMatch).as("predicate_id"),
-        (col("jaccard") * 0.9).as("confidence"))
+    // explicitly so the plan never shuffles the surface side, with or
+    // without AQE. The candidate dedup shuffles only the 2-column key —
+    // the surface string rejoins from the broadcast dictionary afterwards.
+    val candidates = surfaceBands.join(broadcast(dictBands), Seq("band", "sig"))
+      .select("mention", "concept_id")
+      .distinct()
+    verifyAndAttach(fuzzyMentions, candidates, dictSurf, jaccardMin)
   }
 
   /** Fuzzy link via TF-IDF (rarest-token) blocking — the north rule's
@@ -144,16 +169,15 @@ object Linker {
     *
     * Scale shape: token df is an aggregation over the dictionary (small
     * relative to the corpus); the block table (one row per dictionary
-    * surface) broadcasts; the mention side explodes to its distinct
-    * tokens and equi-joins — never shuffled by the raw mention, no
-    * cartesian anywhere.
+    * surface) broadcasts; each distinct mention surface explodes to its
+    * distinct tokens and equi-joins; verified links attach to the
+    * occurrences as in `linkFuzzy` — occurrences are never shuffled by
+    * the raw mention, no cartesian anywhere.
     */
   def linkFuzzyTfidf(mentions: DataFrame, dictionary: DataFrame,
       jaccardMin: Double = 0.55): DataFrame = {
-    val fuzzyMentions = mentions
-      .filter(col("mention").contains(" ") && length(col("mention")) >= 7)
-    val dictSurf = dictionary.select(col("concept_id"),
-      normalize(col("label")).as("surface"))
+    val fuzzyMentions = fuzzyEligible(mentions)
+    val dictSurf = dictSurfaces(dictionary)
     val dictToks = dictSurf
       .select(col("concept_id"), col("surface"),
         explode(array_distinct(split(col("surface"), " "))).as("tok"))
@@ -165,20 +189,13 @@ object Linker {
       .groupBy("concept_id", "surface")
       .agg(min(struct(col("df"), col("tok"))).as("m"))
       .select(col("concept_id"), col("m.tok").as("block"))
-    val mentionToks = fuzzyMentions
-      .select(col("conv_id"), col("turn_idx"), col("mention"),
+    val surfaceToks = fuzzyMentions.select("mention").distinct()
+      .select(col("mention"),
         explode(array_distinct(split(col("mention"), " "))).as("block"))
-    val jac = udf((a: String, b: String) => TextHash.charTrigramJaccard(a, b))
-    mentionToks.join(broadcast(blocks), Seq("block"))
-      .select("conv_id", "turn_idx", "mention", "concept_id")
-      .dropDuplicates("conv_id", "turn_idx", "mention", "concept_id")
-      .join(broadcast(dictSurf), Seq("concept_id"))
-      .withColumn("jaccard", jac(col("mention"), col("surface")))
-      .filter(col("jaccard") >= jaccardMin && col("mention") =!= col("surface"))
-      .select(col("conv_id"), col("turn_idx"), col("mention"),
-        col("concept_id"),
-        lit(Schema.SkosCloseMatch).as("predicate_id"),
-        (col("jaccard") * 0.9).as("confidence"))
+    val candidates = surfaceToks.join(broadcast(blocks), Seq("block"))
+      .select("mention", "concept_id")
+      .distinct()
+    verifyAndAttach(fuzzyMentions, candidates, dictSurf, jaccardMin)
   }
 
   /** Candidate links → SSSOM mapping rows. */

@@ -113,6 +113,62 @@ class PlanAuditSpec extends SparkSpec {
       "the dictionary block table must broadcast")
   }
 
+  test("linkFuzzy plans broadcast equi-joins and never shuffles occurrences " +
+      "on the mention alone") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val mentions = Seq(("c1", 0, "protein kinase alpa"),
+      ("c1", 1, "gamma receptor sit"), ("c2", 0, "protein kinase alpa"))
+      .toDF("conv_id", "turn_idx", "mention").repartition(2)
+    val dict = Seq(("C:1", "protein kinase alpha", "pk"),
+      ("C:2", "gamma receptor site", "gr"))
+      .toDF("concept_id", "label", "synonyms").repartition(2)
+    // size-based broadcast off: every broadcast below comes from the
+    // linker's own hints, as it must at corpus scale
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try for ((name, df) <- Seq(
+        "linkFuzzy" -> graft.kg.Linker.linkFuzzy(mentions, dict),
+        "linkFuzzyTfidf" -> graft.kg.Linker.linkFuzzyTfidf(mentions, dict))) {
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val p = plan.toString
+      assert(!p.contains("CartesianProduct") &&
+        !p.contains("BroadcastNestedLoopJoin"),
+        s"$name must stay equi-join:\n${p.take(2500)}")
+      assert(p.contains("BroadcastHashJoin"), s"$name: no broadcast join")
+      def unwrap(q: SparkPlan): SparkPlan = q match {
+        case w: WholeStageCodegenExec => unwrap(w.child)
+        case i: InputAdapter => unwrap(i.child)
+        case other => other
+      }
+      // an exchange keyed on `mention` alone may only carry the distinct
+      // surfaces (a map-side partial aggregate below it), never occurrences
+      val onMention = plan.collect { case e: ShuffleExchangeExec
+          if (e.outputPartitioning match {
+            case HashPartitioning(Seq(a: Attribute), _) => a.name == "mention"
+            case _ => false
+          }) => e }
+      assert(onMention.nonEmpty, s"$name: no distinct-surface exchange:\n${p.take(2500)}")
+      onMention.foreach { e =>
+        unwrap(e.child) match {
+          case agg: BaseAggregateExec =>
+            assert(agg.requiredChildDistributionExpressions.isEmpty,
+              s"$name: a final aggregate feeds a mention exchange:\n${p.take(2500)}")
+          case other => fail(s"$name shuffles ${other.nodeName} rows on mention " +
+            s"alone:\n${p.take(2500)}")
+        }
+      }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+  }
+
   test("KG analytics family: every plan stays equi-join (no cartesian)") {
     assume(has)
     Seq("q_kg_degree", "q_kg_bfs", "q_kg_pagerank", "q_kg_triangles",

@@ -196,6 +196,72 @@ class KgPipelineSpec extends SparkSpec {
     assert(Files.exists(Paths.get(vicCfg.outDir, "_manifest.json")))
   }
 
+  test("materialize: an empty edge frame gives zero counts, every group " +
+      "complete and a manifest") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val emptyCfg = cfg.copy(
+      outDir = Files.createTempDirectory("kg_empty").toString)
+    val edges = Seq.empty[(String, String, String, String)]
+      .toDF(Schema.SubjectId, Schema.PredicateId, Schema.ObjectId, "component")
+    val r = KgPipeline.materialize(spark, edges, emptyCfg)
+    assert(r == KgPipeline.Result(0L, 0L, 0L, 0L, emptyCfg.resumeGroups, 0))
+    val ledger = Files.readAllLines(Paths.get(emptyCfg.outDir, "_ledger.jsonl"))
+      .asScala.toSeq
+    assert(ledger.count(_.contains("\"status\":\"complete\"")) ==
+      emptyCfg.resumeGroups)
+    assert(!ledger.exists(_.contains("\"bucket\":")), "lineage for no rows")
+    val manifest = new String(Files.readAllBytes(
+      Paths.get(emptyCfg.outDir, "_manifest.json")), "UTF-8")
+    assert(manifest.contains("\"n_triples\":0,\"n_nodes\":0,\"n_components\":0"),
+      manifest)
+  }
+
+  test("materialize layout: one parquet file per bucket directory, lineage " +
+      "in bucket order summing to the manifest") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val layoutCfg = cfg.copy(
+      outDir = Files.createTempDirectory("kg_layout").toString)
+    // more input partitions than buckets, and AQE off as in the KG bench
+    // session, so a bucket split over several tasks (a per-group exchange,
+    // or no bucket partitioning at all) shows up as extra files
+    val graph = KgPipeline.buildGraph(KgPipeline.extractMappings(spark, layoutCfg))
+      .repartition(layoutCfg.buckets * 2)
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val r = try KgPipeline.materialize(spark, graph, layoutCfg)
+      finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    def list(p: Path): Seq[Path] = {
+      val st = Files.list(p)
+      try st.iterator().asScala.toSeq finally st.close()
+    }
+    for (table <- Seq("edges", "nodes")) {
+      val bucketDirs = list(Paths.get(layoutCfg.outDir, table))
+        .flatMap(list).filter(_.getFileName.toString.startsWith("bucket="))
+      assert(bucketDirs.size == layoutCfg.buckets, s"$table: $bucketDirs")
+      bucketDirs.foreach { d =>
+        val files = list(d).map(_.getFileName.toString).filter(_.endsWith(".parquet"))
+        assert(files.size == 1, s"$d holds ${files.size} parquet files")
+      }
+    }
+    val lines = Files.readAllLines(Paths.get(layoutCfg.outDir, "_ledger.jsonl"))
+      .asScala.toSeq
+    def num(l: String, k: String): Option[Long] =
+      s""""$k":(\\d+)""".r.findFirstMatchIn(l).map(_.group(1).toLong)
+    val lineage = lines.filter(_.contains("\"bucket\":"))
+    assert(lineage.size == layoutCfg.buckets)
+    lineage.groupBy(num(_, "group")).values.foreach { ls =>
+      val bs = ls.flatMap(num(_, "bucket"))
+      assert(bs == bs.sorted, s"lineage out of bucket order: $bs")
+    }
+    val manifest = new String(Files.readAllBytes(
+      Paths.get(layoutCfg.outDir, "_manifest.json")), "UTF-8")
+    assert(num(manifest, "n_triples").contains(r.triples))
+    assert(lineage.flatMap(num(_, "n_triples")).sum == r.triples)
+    assert(spark.read.parquet(s"${layoutCfg.outDir}/edges").count() == r.triples)
+  }
+
   test("KgMain: spark-submit arg parsing and end-to-end run") {
     val cfg = KgMain.parse(Array("--out", "/tmp/kgmain_test", "--conv",
       "60", "--turns", "4", "--concepts", "100", "--buckets", "8",
